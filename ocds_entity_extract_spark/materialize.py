@@ -21,7 +21,13 @@ import datetime as dt
 
 from pyspark.sql import DataFrame, functions as F
 
+from ocds_entity_extract_spark.session import local_frame
 from ocds_entity_extract_spark.sources.catalog import Catalog
+
+LINEAGE_SCHEMA = (
+    "run_id string, stage string, partition_key string, row_count bigint,"
+    " content_hash string, committed_ts timestamp"
+)
 
 
 def with_triple_id(triples: DataFrame) -> DataFrame:
@@ -44,28 +50,27 @@ def materialize_triples(
     stamped = with_triple_id(triples)
     cat.overwrite_partitions(table, stamped, partition_by=["pred"])
 
-    written = cat.read(table)
-    lineage = (
-        written.groupBy("pred")
+    # one aggregate over the written table feeds both the lineage rows and
+    # the metrics rows
+    per_pred = (
+        cat.read(table)
+        .groupBy("pred")
         .agg(
             F.count(F.lit(1)).alias("row_count"),
-            F.expr("bit_xor(xxhash64(_id))").alias("xh"),
+            F.lower(F.hex(F.expr("bit_xor(xxhash64(_id))"))).alias("content_hash"),
         )
-        .select(
-            F.lit(run_id).alias("run_id"),
-            F.lit(table).alias("stage"),
-            F.col("pred").alias("partition_key"),
-            F.col("row_count"),
-            F.lower(F.hex("xh")).alias("content_hash"),
-            F.lit(run_ts).alias("committed_ts"),
-        )
+        .collect()
     )
-    cat.append("lineage", lineage)
+    lineage = [
+        (run_id, table, r["pred"], r["row_count"], r["content_hash"], run_ts)
+        for r in per_pred
+    ]
+    cat.append("lineage", local_frame(cat.spark, lineage, LINEAGE_SCHEMA))
 
-    counts = {r["partition_key"]: r["row_count"] for r in lineage.collect()}
-    metrics = {f"triples_{k}": float(v) for k, v in counts.items()}
-    metrics["triples_total"] = float(sum(counts.values()))
-    mdf = cat.spark.createDataFrame(
+    metrics = {f"triples_{r['pred']}": float(r["row_count"]) for r in per_pred}
+    metrics["triples_total"] = float(sum(r["row_count"] for r in per_pred))
+    mdf = local_frame(
+        cat.spark,
         [(run_id, k, v) for k, v in metrics.items()],
         "run_id string, metric string, value double",
     )

@@ -29,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ocds_entity_extract_spark.session import local_frame
+
 
 def _large_star(edges: DataFrame) -> DataFrame:
     sym = edges.select("src", "dst").union(
@@ -97,7 +99,7 @@ def _cc_driver_side(edges: DataFrame) -> DataFrame:
     schema = edges.select(
         F.col("src").alias("entity_id"), F.col("src").alias("canonical_id")
     ).schema
-    return spark.createDataFrame(mapping, schema=schema)
+    return local_frame(spark, mapping, schema)
 
 
 def connected_components(

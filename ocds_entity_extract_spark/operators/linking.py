@@ -34,6 +34,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ocds_entity_extract_spark.session import local_frame
+
 DEFAULT_NUM_HASHES = 16
 DEFAULT_BAND_SIZE = 2          # r: minhashes per band -> B = K / r bands
 # verification: overlap coefficient |A∩B| / min(|A|,|B|) — robust for the
@@ -348,10 +350,10 @@ def verified_edges(
     candidate recall; both families clear the golden P/R gate in pytest.
 
     Cache lifecycle: the cached signature table is attached to the
-    returned DataFrame as ``_cached_deps`` — long-lived sessions (query
-    harnesses) should unpersist those after materializing the edges, or
-    call ``spark.catalog.clearCache()`` between jobs; otherwise repeated
-    invocations accumulate executor storage.
+    returned DataFrame as ``_cached_deps``. The caller unpersists those once
+    the edges are materialized (`build_triples` does so after CC has
+    checkpointed them); otherwise repeated invocations accumulate executor
+    storage.
     """
     base = entities.select(id_col).distinct()
     sig = minhash_signature_table(
@@ -514,6 +516,6 @@ def linking_mapping_driver_side(
     """ids -> (entity_id, canonical_id) via `linking_canon_dict`. Output
     contract identical to `canonical_mapping(ids, verified_edges(ids))`."""
     canon = linking_canon_dict(slugs, hash_family=hash_family)
-    return spark.createDataFrame(
-        sorted(canon.items()), "entity_id string, canonical_id string"
+    return local_frame(
+        spark, sorted(canon.items()), "entity_id string, canonical_id string"
     )

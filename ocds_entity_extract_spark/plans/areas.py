@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ocds_entity_extract_spark.functions.geo import (
+    MX_STATE_ROWS,
     mx_state_dim,
     with_country_code,
     with_state_code,
@@ -80,17 +81,9 @@ def area_branch_py(
     is ~10 broadcast-join stages of pure scheduling latency over at most a
     few thousand rows; above it the Spark branch runs unchanged.
     """
-    from ocds_entity_extract_spark.functions.geo import (
-        MX_STATES,
-        MX_STATE_ALIASES,
-    )
     from ocds_entity_extract_spark.functions.text import simple_name_py
 
-    iso_by_name = dict(MX_STATES)
-    state_dim = [(n, c, simple_name_py(n)) for n, c in MX_STATES] + [
-        (a, iso_by_name[canon], simple_name_py(a))
-        for a, canon in MX_STATE_ALIASES
-    ]
+    state_dim = [(n, c, simple_name_py(n)) for n, c in MX_STATE_ROWS]
 
     # infer_institution_regions: suffix probe, min(state_name) per entity
     best: dict[str, str] = {}

@@ -56,6 +56,7 @@ from ocds_entity_extract_spark.operators.merge import (
     rank_type,
     type_rank,
 )
+from ocds_entity_extract_spark.session import local_frame
 
 
 @dataclass
@@ -200,11 +201,9 @@ def build_triples(
             s: canon[e]
             for s, e in zip(dim_pdf["surface"], dim_pdf["entity_id"])
         }
-        mapping_plain = spark.createDataFrame(
-            sorted(canon.items()), "entity_id string, canonical_id string"
+        mapping_plain = local_frame(
+            spark, sorted(canon.items()), "entity_id string, canonical_id string"
         )
-        if cache_intermediates:
-            mapping_plain = mapping_plain.cache()
         # bounded by max_driver_linking rows -> always broadcastable: the
         # hint turns every downstream mapping JOIN (canon mentions, type
         # rank, membership x2, contacts) into a map-side probe instead of
@@ -217,6 +216,10 @@ def build_triples(
         mapping_plain = canonical_mapping(
             ids, edges, small_graph_threshold=cc_small_graph_threshold
         )
+        # CC has eagerly checkpointed the edge set, so nothing reads the
+        # cached signature table behind `edges` any more
+        for dep in edges._cached_deps:
+            dep.unpersist()
         if cache_intermediates:
             mapping_plain = mapping_plain.cache()
         # DISTRIBUTED linking + DICT assembly: the two thresholds are
@@ -317,7 +320,8 @@ def build_triples(
         # (static) geo dims are all already on the driver, so the
         # type/sameAs/area triples — a few thousand rows at most under
         # `max_driver_linking` — are computed in plain Python and shipped
-        # back as ONE createDataFrame. The Spark branch below runs these as
+        # back as JVM local tables (`local_frame`), which no Python worker
+        # ever scans. The Spark branch below runs these as
         # ~10 broadcast-join/agg stages whose scheduling latency is pure
         # fixed cost at ANY corpus size (measured ~5-6s per run regardless
         # of core count — the single biggest non-scaling term in the
@@ -348,12 +352,12 @@ def build_triples(
             addr_rows, node_rows, area_rows = area_branch_py(inst_pairs)
         else:
             addr_rows, node_rows, area_rows = [], [], []
-        addrs = spark.createDataFrame(addr_rows, _addr_schema)
-        areas_tbl = spark.createDataFrame(node_rows, _nodes_schema)
-        small_triples = spark.createDataFrame(
-            type_rows + sameas_rows + area_rows, _triple_schema
+        addrs = local_frame(spark, addr_rows, _addr_schema)
+        areas_tbl = local_frame(spark, node_rows, _nodes_schema)
+        small_triples = local_frame(
+            spark, type_rows + sameas_rows + area_rows, _triple_schema
         )
-        sameas = spark.createDataFrame(sameas_rows, _triple_schema)
+        sameas = local_frame(spark, sameas_rows, _triple_schema)
     else:
         canon_rank = (
             dim.select("entity_id", type_rank("entity_type").alias("_rank"))
@@ -391,9 +395,9 @@ def build_triples(
             area_triples = area_edges(addrs, spark).select("subj", "pred", "obj")
             areas_tbl = area_nodes(addrs, spark)
         else:
-            addrs = spark.createDataFrame([], _addr_schema)
-            area_triples = spark.createDataFrame([], _triple_schema)
-            areas_tbl = spark.createDataFrame([], _nodes_schema)
+            addrs = local_frame(spark, [], _addr_schema)
+            area_triples = local_frame(spark, [], _triple_schema)
+            areas_tbl = local_frame(spark, [], _nodes_schema)
 
         sameas = (
             mapping_plain.filter(F.col("entity_id") != F.col("canonical_id"))
@@ -459,7 +463,8 @@ def build_triples(
         # institutions on the contact-bearing pages only (tiny subset):
         # the semi join broadcasts the contact urls, so no corpus shuffle
         if surf2canon is not None:
-            inst_df = spark.createDataFrame(
+            inst_df = local_frame(
+                spark,
                 [(c,) for c, rk in sorted(rank_by_canon.items()) if rk == 3],
                 "org_canon string",
             )

@@ -1611,7 +1611,7 @@ def _kg_seeded_triples_oracle_sql(n_pages: int = 300) -> str:
         INSTITUTION_KEYWORDS,
         _slug_py,
     )
-    from ocds_entity_extract_spark.functions.geo import MX_STATES, MX_STATE_ALIASES
+    from ocds_entity_extract_spark.functions.geo import MX_STATE_ROWS
     from ocds_entity_extract_spark.operators.linking import (
         DEFAULT_BAND_SIZE,
         DEFAULT_CONTAINMENT_THRESHOLD,
@@ -1632,10 +1632,7 @@ def _kg_seeded_triples_oracle_sql(n_pages: int = 300) -> str:
     sig_ctes, band_selects = _minhash_sig_ctes(
         "shw", DEFAULT_NUM_HASHES, DEFAULT_BAND_SIZE
     )
-    dim_rows = [(n, c, _slug_py(n)) for n, c in MX_STATES] + [
-        (alias, dict(MX_STATES)[canon], _slug_py(alias))
-        for alias, canon in MX_STATE_ALIASES
-    ]
+    dim_rows = [(n, c, _slug_py(n)) for n, c in MX_STATE_ROWS]
     statedim = ", ".join(f"('{n}', '{c}', '{s}')" for n, c, s in dim_rows)
     slug = lambda e: _SLUG_SQL.format(e=e)  # noqa: E731
     return rf"""
@@ -1868,7 +1865,7 @@ def _kg_seeded_entities_oracle_sql(n_pages: int = 300) -> str:
         INSTITUTION_KEYWORDS,
         _slug_py,
     )
-    from ocds_entity_extract_spark.functions.geo import MX_STATES, MX_STATE_ALIASES
+    from ocds_entity_extract_spark.functions.geo import MX_STATE_ROWS
     from ocds_entity_extract_spark.operators.linking import (
         DEFAULT_BAND_SIZE,
         DEFAULT_CONTAINMENT_THRESHOLD,
@@ -1890,10 +1887,7 @@ def _kg_seeded_entities_oracle_sql(n_pages: int = 300) -> str:
     sig_ctes, band_selects = _minhash_sig_ctes(
         "shw", DEFAULT_NUM_HASHES, DEFAULT_BAND_SIZE
     )
-    dim_rows = [(n, c, _slug_py(n)) for n, c in MX_STATES] + [
-        (alias, dict(MX_STATES)[canon], _slug_py(alias))
-        for alias, canon in MX_STATE_ALIASES
-    ]
+    dim_rows = [(n, c, _slug_py(n)) for n, c in MX_STATE_ROWS]
     statedim = ", ".join(f"('{n}', '{c}', '{s}')" for n, c, s in dim_rows)
     slug = lambda e: _SLUG_SQL.format(e=e)  # noqa: E731
     return rf"""
@@ -2318,7 +2312,7 @@ def _kg_triples_oracle_sql() -> str:
         INSTITUTION_KEYWORDS,
         _slug_py,
     )
-    from ocds_entity_extract_spark.functions.geo import MX_STATES, MX_STATE_ALIASES
+    from ocds_entity_extract_spark.functions.geo import MX_STATE_ROWS
     from ocds_entity_extract_spark.operators.linking import (
         DEFAULT_BAND_SIZE,
         DEFAULT_CONTAINMENT_THRESHOLD,
@@ -2348,10 +2342,7 @@ def _kg_triples_oracle_sql() -> str:
     )
     # state dim VALUES from the same constants mx_state_dim() loads
     # (canonical rows + alias rows, slug via the same translate table)
-    dim_rows = [(name, code, _slug_py(name)) for name, code in MX_STATES] + [
-        (alias, dict(MX_STATES)[canon], _slug_py(alias))
-        for alias, canon in MX_STATE_ALIASES
-    ]
+    dim_rows = [(n, c, _slug_py(n)) for n, c in MX_STATE_ROWS]
     statedim = ", ".join(
         f"('{n}', '{c}', '{s}')" for n, c, s in dim_rows
     )
@@ -2617,7 +2608,7 @@ def _kg_entities_oracle_sql() -> str:
         INSTITUTION_KEYWORDS,
         _slug_py,
     )
-    from ocds_entity_extract_spark.functions.geo import MX_STATES, MX_STATE_ALIASES
+    from ocds_entity_extract_spark.functions.geo import MX_STATE_ROWS
     from ocds_entity_extract_spark.operators.linking import (
         DEFAULT_BAND_SIZE,
         DEFAULT_CONTAINMENT_THRESHOLD,
@@ -2649,10 +2640,7 @@ def _kg_entities_oracle_sql() -> str:
         )
         + f" ELSE '{_KG_TPL_STATES[-1]}' END"
     )
-    dim_rows = [(name, code, _slug_py(name)) for name, code in MX_STATES] + [
-        (alias, dict(MX_STATES)[canon], _slug_py(alias))
-        for alias, canon in MX_STATE_ALIASES
-    ]
+    dim_rows = [(n, c, _slug_py(n)) for n, c in MX_STATE_ROWS]
     statedim = ", ".join(f"('{n}', '{c}', '{s}')" for n, c, s in dim_rows)
     slug = lambda e: _SLUG_SQL.format(e=e)  # noqa: E731
     return rf"""

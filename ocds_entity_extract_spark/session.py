@@ -3,7 +3,10 @@
 Scale stance (100 TB / 1000-executor design, tested on local[N]):
 - AQE on: runtime coalescing of shuffle partitions, skew-join splitting for
   hot domains/entities (north_rule requirement), dynamic join strategy.
-- Arrow enabled for all pandas-UDF stages (the only Python in the hot path).
+- Arrow enabled for all pandas-UDF stages (the only Python workers in the
+  hot path). Driver-built tables go through `local_frame`, which ships them
+  to the JVM as Arrow and plans them as a `LocalRelation`, so scanning or
+  broadcasting one never starts a Python worker.
 - `spark.sql.shuffle.partitions` sized by caller (cores*4 locally; on a real
   cluster this is ~2-3x total cores and AQE coalesces down).
 - Nested schema pruning stays on (default) so struct-typed mention columns
@@ -14,7 +17,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, TimestampType
 
 
 def get_spark(
@@ -73,3 +77,40 @@ def _local_n(master: str, default: int) -> int:
         return int(master.split("[", 1)[1].rstrip("]"))
     except (IndexError, ValueError):
         return default
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: str | StructType
+) -> DataFrame:
+    """Driver-side rows -> a DataFrame planned as a JVM `LocalRelation`.
+
+    `spark.createDataFrame(<list>)` plans as a Python RDD scan
+    (parallelize -> mapPartitions), so every scan of it, and every
+    broadcast of it, runs one Python-worker task per partition. Shipped as
+    a `pyarrow.Table` instead, a table under
+    `spark.sql.execution.arrow.localRelationThreshold` becomes a
+    `LocalRelation`: JVM-only, with exact size statistics.
+
+    `schema` is a DDL string or a StructType. Timestamps follow the list
+    path's reading: a naive datetime is local time, an aware one is
+    converted to UTC.
+    """
+    import datetime as dt
+
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    arrays = []
+    for values, field, arrow_field in zip(columns, schema.fields, arrow_schema):
+        if isinstance(field.dataType, TimestampType):
+            values = [
+                None if v is None else v.astimezone(dt.timezone.utc)
+                for v in values
+            ]
+        arrays.append(pa.array(list(values), type=arrow_field.type))
+    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)

@@ -163,6 +163,27 @@ def test_build_triples_driver_vs_distributed_linking(spark, pages_df):
     assert t_fast == t_slow and len(t_fast) > 0
 
 
+def test_distributed_build_releases_signature_cache(spark, pages_df, monkeypatch):
+    """The MinHash signature table `verified_edges` caches is unpersisted
+    once CC has checkpointed the edges, so a forced-distributed
+    build_triples leaves no cached relation holding it."""
+    from pyspark import StorageLevel
+
+    from ocds_entity_extract_spark.plans import pipeline
+
+    seen = []
+
+    def spy(*args, **kwargs):
+        edges = verified_edges(*args, **kwargs)
+        seen.extend(edges._cached_deps)
+        return edges
+
+    monkeypatch.setattr(pipeline, "verified_edges", spy)
+    pipeline.build_triples(spark, pages_df, max_driver_linking=0)
+    assert len(seen) == 1 and "sh_hashed" in seen[0].columns
+    assert seen[0].storageLevel == StorageLevel.NONE
+
+
 def test_build_triples_parity_on_coined_corpus(spark, monkeypatch):
     """Round-4 scaling evidence companion: on a corpus whose entity
     universe extends past the handcrafted vocabulary into COINED tokens

@@ -46,6 +46,17 @@ def test_materialize_lineage_metrics(spark, tmp_path):
     lineage = cat.read("lineage")
     assert lineage.count() == 3  # one row per pred partition
     assert cat.read("metrics").count() == 4
+    # metrics and lineage come from one aggregate: each per-pred metric is
+    # that predicate's lineage row_count for the run
+    rows = lineage.filter(F.col("run_id") == "r1").collect()
+    assert {f"triples_{r['partition_key']}": float(r["row_count"]) for r in rows} == {
+        k: v for k, v in metrics.items() if k != "triples_total"
+    }
+    stored_metrics = {
+        r["metric"]: r["value"]
+        for r in cat.read("metrics").filter(F.col("run_id") == "r1").collect()
+    }
+    assert stored_metrics == metrics
 
 
 def test_materialize_rerun_idempotent(spark, tmp_path):
